@@ -167,7 +167,7 @@ class FrontierBench:
         self.spark = spark
         self.n_ids = BENCH_FRONTIER_URLS // 2  # two urls (rf/rl) per id
         # hot-host list computed ONCE untimed — the production shape:
-        # CrawlJob refreshes it every hot_refresh_waves, so the steady-
+        # CrawlJob refreshes it every HOT_REFRESH_WAVES, so the steady-
         # state wave pays one frontier scan + one shuffle, not a count
         # aggregation job per wave (the list changes slowly by design)
         from crawler_spark.operators.politeness import hot_host_list

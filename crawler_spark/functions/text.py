@@ -105,39 +105,6 @@ def shingles(text: Column, k: int = 3) -> Column:
     )
 
 
-def minhash_value(shingle_col: Column, perm: int) -> Column:
-    """One MinHash permutation: min over shingles of h32('{perm}:'+shingle).
-
-    Salting the md5 input with the permutation index gives k independent
-    hash functions without (a*x+b) parameter tables — and keeps the oracle
-    SQL a one-liner.
-    """
-    return F.array_min(
-        F.transform(shingle_col, lambda s: h32(F.concat(F.lit(f"{perm}:"), s)))
-    )
-
-
-def minhash_signature(text: Column, num_perm: int = 16, k: int = 3) -> Column:
-    """Array of ``num_perm`` MinHash values over word k-shingles."""
-    sh = shingles(text, k)
-    return F.array(*[minhash_value(sh, p) for p in range(num_perm)])
-
-
-def lsh_band_key(sig: Column, band: int, rows_per_band: int) -> Column:
-    """LSH band key: h32 of the band's minhash values joined with ':'.
-
-    Docs sharing any band key are near-duplicate candidates (standard
-    banding: P[candidate] = 1-(1-J^r)^b).
-    """
-    vals = F.slice(sig, band * rows_per_band + 1, rows_per_band)
-    return h32(
-        F.concat(
-            F.lit(f"{band}|"),
-            F.array_join(F.transform(vals, lambda v: v.cast("string")), ":"),
-        )
-    )
-
-
 def simhash32(text: Column) -> Column:
     """32-bit SimHash over distinct whitespace tokens.
 
@@ -163,11 +130,6 @@ def simhash32(text: Column) -> Column:
     for c in bits[1:]:
         out = out + c
     return out
-
-
-def hamming32(a: Column, b: Column) -> Column:
-    """Hamming distance between two 32-bit ints via bit_count(xor)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def rolling_fingerprint(text: Column, base: int = 131) -> Column:

@@ -1,10 +1,9 @@
 """URL column functions — all native Spark SQL expressions (JVM-side,
 whole-stage-codegen; no Python in the hot path).
 
-Mirrors: card-id → URL template (``CrawlerPet911/Utils.fs:26-33``), photo-id
-extraction (``ParserPet911.fs:139-145``), photo-id composition
-(``CrawlerPet911/CrawlerPet911.fs:137-146``), plus the north_rule's
-canonical-URL 64-bit hashing and host extraction for politeness partitioning.
+Mirrors: card-id → URL template (``CrawlerPet911/Utils.fs:26-33``), plus
+the north_rule's canonical-URL 64-bit hashing and host extraction for
+politeness partitioning.
 """
 
 from __future__ import annotations
@@ -27,26 +26,6 @@ def card_id_to_url(card_id: Column) -> Column:
     `format_string`: the template's literal percent-escapes must survive
     verbatim (the server is case-sensitive about them, Downloader.fs:58-64)."""
     return F.concat(F.lit(CARD_URL_TEMPLATE[: -len("%s")]), card_id)
-
-
-def card_num(card_id: Column) -> Column:
-    """Numeric suffix of 'rf123'/'rl123' (Program.fs:71, NewCards.fs:148)."""
-    return F.substring(card_id, 3, 2_000_000).cast("long")
-
-
-def card_kind(card_id: Column) -> Column:
-    """'rf' or 'rl' prefix; rf sorts before rl (crawl order, Utils.fs:20-23)."""
-    return F.substring(card_id, 1, 2)
-
-
-def photo_filename(photo_url: Column) -> Column:
-    """ParserPet911.fs:139-145 — substring after the last '/'."""
-    return F.element_at(F.split(photo_url, "/"), -1)
-
-
-def compose_photo_id(card_id: Column, photo_url: Column) -> Column:
-    """CrawlerPet911.fs:140 — '{cardID}/{filename.ext}'."""
-    return F.concat(card_id, F.lit("/"), photo_filename(photo_url))
 
 
 def url_host(url: Column) -> Column:

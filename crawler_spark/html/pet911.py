@@ -277,11 +277,6 @@ def parse_photo_id(photo_id: str):
     return None
 
 
-def downloaded_bytes_to_text(data: bytes) -> str:
-    """Downloader.fs:27-30 — Encoding.Default (UTF-8 on Linux), U+FFFD on bad bytes."""
-    return data.decode("utf-8", errors="replace")
-
-
 def parse_card(text: str):
     """Full-card assembly with the reference's exact short-circuit order
     (CrawlerPet911/CrawlerPet911.fs:101-161): species → sex → authorName →

@@ -2,7 +2,7 @@
 columns with typed metadata, processed in Arrow-batched pandas UDFs.
 
 The container has no image/audio codecs, so the *decode kernels* are
-deterministic fakes or clearly-marked stubs — but the Spark-side plumbing
+deterministic fakes — but the Spark-side plumbing
 (schemas, ``mapInPandas`` batch shape, partition sizing, metadata structs)
 is real and tested.  On a real cluster only the kernel body changes
 (PIL/libav call instead of the fake), the plan stays identical.
@@ -59,14 +59,6 @@ def _fake_decode_image(data: bytes) -> np.ndarray:
     arr = np.frombuffer(data, dtype=np.uint8)
     reps = -(-64 // len(arr))  # ceil
     return np.tile(arr, reps)[:64].reshape(8, 8)
-
-
-def decode_audio_stub(data: bytes) -> np.ndarray:
-    """STUB: audio decode requires a codec library not in this container."""
-    raise NotImplementedError(
-        "audio decode needs soundfile/libav — plug the real kernel here; "
-        "the Spark plumbing (extract_image_features pattern) is identical"
-    )
 
 
 def extract_image_features(media: DataFrame,

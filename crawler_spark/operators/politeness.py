@@ -114,7 +114,7 @@ def hot_host_list(frontier_df: DataFrame,
     is bounded by total/threshold (<= 10^5 rows, KBs).  The hot set
     changes slowly between waves — a crawl loop should compute it once
     and refresh every few waves rather than re-aggregating the whole
-    frontier per wave (see CrawlJob.hot_refresh_waves)."""
+    frontier per wave (see CrawlJob.HOT_REFRESH_WAVES)."""
     return (
         frontier_df.groupBy("host")
         .agg(F.count(F.lit(1)).alias("__host_n"))
@@ -142,7 +142,8 @@ def select_wave_salted(frontier_df: DataFrame, wave_seconds: int = 60,
     rounding at scale, never a correctness issue.
 
     ``hot_hosts`` (optional) is a precomputed one-column host DataFrame
-    (see :func:`hot_host_list`).  Passing it skips the per-wave count
+    (see :func:`hot_host_list`; repeated hosts are fine — it is
+    deduplicated here).  Passing it skips the per-wave count
     aggregation — the production shape, since the hot set changes slowly
     and a stale entry only costs a few waves of either per-salt rounding
     (cold host still salted) or single-task ranking (new-hot host not yet
@@ -150,9 +151,8 @@ def select_wave_salted(frontier_df: DataFrame, wave_seconds: int = 60,
     """
     if hot_hosts is None:
         hot_hosts = hot_host_list(frontier_df, hot_host_threshold)
-    df = frontier_df.join(
-        F.broadcast(hot_hosts.withColumn("__hot", F.lit(True))), "host", "left"
-    )
+    hot = hot_hosts.select("host").distinct().withColumn("__hot", F.lit(True))
+    df = frontier_df.join(F.broadcast(hot), "host", "left")
     if robots_df is not None:
         delays = F.broadcast(
             robots_df.groupBy("host").agg(F.min("crawl_delay_ms").alias("crawl_delay_ms"))

@@ -9,11 +9,16 @@ local presence as "already crawled" (FileCollector.fs:5-25).  Here:
 
 Both checks are LEFT ANTI joins — the exact-correctness backstop.  At
 10^10-URL scale an anti-join of every wave against the full seen table is the
-dominant shuffle, so we put a **partitioned Bloom prefilter** in front: build
-one bloom per seen-table partition (numpy bitmap inside mapInPandas, OR-merged
-on the driver), broadcast the merged filter, and drop the guaranteed-unseen
-rows cheaply before the exact anti-join runs on the survivors.  False
-positives only cost a row entering the exact join; never correctness.
+dominant shuffle, so one **sharded Bloom prefilter** (:class:`ShardedBloom`)
+goes in front: partial bitmaps are built per seen-table partition (numpy
+inside mapInPandas) and OR-merged on the driver; the merged filter is then
+broadcast (:func:`filter_unseen_with_bloom`) or, when its bitmap is too big
+to broadcast, routed shard-by-shard to the tasks holding each key range
+(:func:`filter_unseen_with_bloom_sharded`).  Either way the guaranteed-unseen
+rows skip the exact anti-join, which runs only on the maybe-seen survivors.
+False positives only cost a row entering the exact join; never correctness.
+A crawl builds the filter only once |seen| is large enough for the
+prefilter to beat the plain anti-join (``CrawlJob.PREFILTER_MIN_SEEN``).
 """
 
 from __future__ import annotations
@@ -49,9 +54,8 @@ class BloomFilter:
         self.n_bits = n_bits
         self.n_hashes = n_hashes
         self.bits = bits if bits is not None else np.zeros(n_bits // 8 + 1, dtype=np.uint8)
-        # running count of keys folded in (upper bound on distinct keys) —
-        # the cost gate that decides prefilter-vs-exact reads this, so it is
-        # carried through merge() and the serialized blob header
+        # running count of keys folded in (upper bound on distinct keys),
+        # carried through partial merges and the serialized blob header
         self.n_items = 0
 
     @classmethod
@@ -80,12 +84,6 @@ class BloomFilter:
         pos = self._positions(keys)
         hit = (self.bits[pos >> 3] >> (pos & 7)) & 1
         return hit.all(axis=0).astype(bool)
-
-    def merge(self, other: "BloomFilter") -> "BloomFilter":
-        assert self.n_bits == other.n_bits and self.n_hashes == other.n_hashes
-        out = BloomFilter(self.n_bits, self.n_hashes, self.bits | other.bits)
-        out.n_items = self.n_items + other.n_items
-        return out
 
 
 class ShardedBloom(BloomFilter):
@@ -215,239 +213,6 @@ def build_bloom_into(df: DataFrame, proto: BloomFilter,
     return merged
 
 
-class CuckooFilter:
-    """Cuckoo filter over int64 keys — the deletion-capable alternative to
-    :class:`ShardedBloom` (north_rule: "bloom/cuckoo URL-seen set").
-
-    Standard 2-choice construction: 16-bit fingerprints, 4 slots/bucket,
-    bucket₂ = bucket₁ XOR h(fingerprint), insert-with-eviction.  Unlike a
-    bloom it supports ``delete_many`` — which is exactly what the cache
-    re-validation sweep wants: a healed card's key can be REMOVED so the
-    prefilter stays precise, where the bloom permanently accumulates stale
-    keys (correct either way — stale keys only cost exact-join traffic).
-
-    Lookup is fully vectorized (two gathers + compares per key batch);
-    insert/delete run a per-key Python loop, acceptable because the engine
-    only ever inserts ONE politeness-bounded wave at a time, never a whole
-    table.  At 10^10 keys the same shard-by-key-mod layout as ShardedBloom
-    applies (each executor holds/serves its key range's filter); 16-bit
-    fingerprints at load ≤0.84 give ~2^-13 fpp per probe.
-    """
-
-    _MAGIC = 0x43_4B_46_31  # "CKF1"
-
-    def __init__(self, n_buckets: int, slots: int = 4, max_kicks: int = 500,
-                 table: np.ndarray | None = None):
-        assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of 2"
-        self.n_buckets = n_buckets
-        self.slots = slots
-        self.max_kicks = max_kicks
-        self.table = (
-            table if table is not None
-            else np.zeros((n_buckets, slots), dtype=np.uint16)
-        )
-        self.n_items = 0  # fingerprints currently stored (cost-gate input)
-
-    @classmethod
-    def sized(cls, expected_items: int, load: float = 0.84) -> "CuckooFilter":
-        need = max(int(expected_items / (4 * load)), 1)
-        n_buckets = 1 << (need - 1).bit_length()
-        return cls(n_buckets)
-
-    # -- hashing ------------------------------------------------------------
-    def _fp(self, keys: np.ndarray) -> np.ndarray:
-        k = keys.astype(np.uint64)
-        fp = ((k * np.uint64(0xFF51AFD7ED558CCD)) >> np.uint64(48)).astype(np.uint16)
-        fp[fp == 0] = 1  # 0 marks an empty slot
-        return fp
-
-    def _i1(self, keys: np.ndarray) -> np.ndarray:
-        k = keys.astype(np.uint64)
-        return ((k * np.uint64(0x9E3779B97F4A7C15)) >> np.uint64(17)).astype(
-            np.int64
-        ) & (self.n_buckets - 1)
-
-    def _i2(self, i1: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        h = (fp.astype(np.uint64) * np.uint64(0x5BD1E995)) & np.uint64(
-            self.n_buckets - 1
-        )
-        return (i1.astype(np.uint64) ^ h).astype(np.int64)
-
-    # -- ops ----------------------------------------------------------------
-    def _present(self, buckets: np.ndarray, fps: np.ndarray) -> np.ndarray:
-        """Column-unrolled ``fp in table[bucket]`` for a key batch."""
-        rows = self.table[buckets]
-        out = np.zeros(len(fps), dtype=bool)
-        for j in range(self.slots):
-            out |= rows[:, j] == fps
-        return out
-
-    def _bulk_place(self, fps: np.ndarray, buckets: np.ndarray) -> np.ndarray:
-        """Scatter each fingerprint into an empty slot of its bucket, giving
-        colliding same-bucket keys distinct slots via within-bucket ranks.
-        Returns the boolean placed mask.  Pure numpy — no per-key Python."""
-        if len(fps) == 0:
-            return np.zeros(0, dtype=bool)
-        rows = self.table[buckets]                      # gather (copy)
-        # column-wise over the (tiny) slot axis: axis-1 reductions on
-        # millions of 4-wide rows pay per-row setup cost; column ops don't
-        empty_cols = [rows[:, j] == 0 for j in range(self.slots)]
-        n_empty = np.zeros(len(fps), dtype=np.int64)
-        for c in empty_cols:
-            n_empty += c
-        # rank of each key among the batch keys that share its bucket
-        order = np.argsort(buckets, kind="stable")
-        sb = buckets[order]
-        group_start = np.zeros(len(sb), dtype=np.int64)
-        new_group = np.flatnonzero(sb[1:] != sb[:-1]) + 1
-        group_start[new_group] = new_group
-        np.maximum.accumulate(group_start, out=group_start)
-        rank = np.empty(len(sb), dtype=np.int64)
-        rank[order] = np.arange(len(sb)) - group_start
-        placed = rank < n_empty
-        if placed.any():
-            # the (rank+1)-th empty slot of the bucket, column-unrolled
-            target = rank + 1
-            slot = np.full(len(fps), -1, dtype=np.int64)
-            cum = np.zeros(len(fps), dtype=np.int64)
-            for j, c in enumerate(empty_cols):
-                cum += c
-                hit = placed & (slot < 0) & c & (cum == target)
-                slot[hit] = j
-            self.table[buckets[placed], slot[placed]] = fps[placed]
-        return placed
-
-    def insert_many(self, keys: np.ndarray) -> int:
-        """Insert; returns the number of keys DROPPED (table too full —
-        callers size the filter so this stays 0; a dropped key is a false
-        negative, so the caller must fall back to exact joins if nonzero).
-
-        Bulk path: dedupe on (bucket₁, fingerprint) — the entry identity, so
-        re-inserting a key is idempotent — then vectorized presence check and
-        two rounds of first-empty-slot scatter (bucket₁ then bucket₂).  Only
-        keys whose both buckets are full fall through to the per-key
-        eviction loop, which is empty below the design load factor."""
-        import random
-
-        keys = np.asarray(keys, dtype=np.int64)
-        if len(keys) == 0:
-            return 0
-        fps, i1s = self._fp(keys), self._i1(keys)
-        i2s = self._i2(i1s, fps)
-        # entry identity = (unordered {i1,i2}, fp): i2 = i1 ^ h(fp), so the
-        # same entry has exactly two ordered representations — canonicalize
-        # with min(i1,i2) and keep the first occurrence only (idempotence)
-        _, first = np.unique(
-            np.minimum(i1s, i2s).astype(np.uint64) * np.uint64(1 << 16) + fps,
-            return_index=True,
-        )
-        first = np.sort(first)
-        fps, i1s, i2s = fps[first], i1s[first], i2s[first]
-        # presence first (idempotence — no duplicate fingerprints)
-        todo = ~(self._present(i1s, fps) | self._present(i2s, fps))
-        placed1 = np.zeros(len(fps), dtype=bool)
-        placed1[todo] = self._bulk_place(fps[todo], i1s[todo])
-        todo &= ~placed1
-        placed2 = np.zeros(len(fps), dtype=bool)
-        placed2[todo] = self._bulk_place(fps[todo], i2s[todo])
-        todo &= ~placed2
-        self.n_items += int(placed1.sum() + placed2.sum())
-
-        # eviction path (rare: both buckets full)
-        rng = random.Random(0xC0FFEE)
-        dropped = 0
-        for fp, i1 in zip(fps[todo].tolist(), i1s[todo].tolist()):
-            b, cur = i1, fp
-            for _ in range(self.max_kicks):
-                s = rng.randrange(self.slots)
-                cur, self.table[b][s] = int(self.table[b][s]), cur
-                b = int(
-                    self._i2(np.array([b]), np.array([cur], dtype=np.uint16))[0]
-                )
-                row = self.table[b]
-                empty = np.nonzero(row == 0)[0]
-                if len(empty):
-                    row[empty[0]] = cur
-                    cur = None
-                    break
-            if cur is not None:
-                dropped += 1
-            else:
-                self.n_items += 1
-        return dropped
-
-    def _bulk_remove(self, fps: np.ndarray, buckets: np.ndarray) -> np.ndarray:
-        """Zero the slot holding each fingerprint in its bucket (if any);
-        returns the boolean removed mask.  Distinct (bucket, fp) pairs can
-        never target the same slot, so the scatter is collision-free."""
-        if len(fps) == 0:
-            return np.zeros(0, dtype=bool)
-        rows = self.table[buckets]
-        found = np.zeros(len(fps), dtype=bool)
-        slot = np.full(len(fps), -1, dtype=np.int64)
-        for j in range(self.slots):
-            hit = ~found & (rows[:, j] == fps)
-            slot[hit] = j
-            found |= hit
-        if found.any():
-            self.table[buckets[found], slot[found]] = 0
-        return found
-
-    def delete_many(self, keys: np.ndarray) -> int:
-        """Remove one fingerprint copy per key; returns keys not found.
-        Vectorized two-phase zeroing (bucket₁ then bucket₂); duplicate keys
-        in one batch collapse to one removal, the rest count as missing."""
-        keys = np.asarray(keys, dtype=np.int64)
-        if len(keys) == 0:
-            return 0
-        fps, i1s = self._fp(keys), self._i1(keys)
-        i2s = self._i2(i1s, fps)
-        uniq, first = np.unique(
-            np.minimum(i1s, i2s).astype(np.uint64) * np.uint64(1 << 16) + fps,
-            return_index=True,
-        )
-        dup_extra = int(len(keys) - len(uniq))  # extra copies always miss
-        first = np.sort(first)
-        fps, i1s, i2s = fps[first], i1s[first], i2s[first]
-        removed1 = self._bulk_remove(fps, i1s)
-        rest = ~removed1
-        removed2 = np.zeros(len(fps), dtype=bool)
-        if rest.any():
-            removed2[rest] = self._bulk_remove(fps[rest], i2s[rest])
-        n_removed = int(removed1.sum() + removed2.sum())
-        self.n_items = max(0, self.n_items - n_removed)
-        return int(len(fps) - n_removed) + dup_extra
-
-    def might_contain(self, keys: np.ndarray) -> np.ndarray:
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        fps, i1s = self._fp(keys), self._i1(keys)
-        i2s = self._i2(i1s, fps)
-        return self._present(i1s, fps) | self._present(i2s, fps)
-
-    # -- serialization ------------------------------------------------------
-    def to_bytes(self) -> bytes:
-        header = np.array(
-            [self._MAGIC, self.n_buckets, self.slots, self.max_kicks,
-             self.n_items],
-            dtype=np.int64,
-        )
-        return header.tobytes() + self.table.tobytes()
-
-    @classmethod
-    def from_bytes(cls, raw: bytes) -> "CuckooFilter":
-        header = np.frombuffer(raw[:40], dtype=np.int64)
-        assert header[0] == cls._MAGIC, "not a CuckooFilter blob"
-        cf = cls(int(header[1]), int(header[2]), int(header[3]))
-        cf.table = (
-            np.frombuffer(raw[40:], dtype=np.uint16)
-            .reshape(cf.n_buckets, cf.slots)
-            .copy()
-        )
-        cf.n_items = int(header[4])
-        return cf
-
-
 def build_bloom(seen_df: DataFrame, key: str = "url_hash",
                 expected_items: int | None = None, fpp: float = 0.01) -> BloomFilter:
     """One-shot distributed bloom build sized from the input (counts the
@@ -459,33 +224,24 @@ def build_bloom(seen_df: DataFrame, key: str = "url_hash",
     return build_bloom_into(seen_df, proto, key)
 
 
-def serialize_filter(flt) -> tuple:
+def serialize_filter(flt: BloomFilter) -> tuple:
     """Type-preserving wire form for broadcasting a seen-filter to executors.
 
-    The filter's bit/slot layout is part of its identity: reconstructing a
+    The filter's bit layout is part of its identity: reconstructing a
     ShardedBloom's bitmap as a plain BloomFilter computes DIFFERENT bit
-    positions — silent false negatives.  Self-describing blobs (magic-headed
-    to_bytes) carry the type; the plain BloomFilter ships its two params.
+    positions — silent false negatives.  A ShardedBloom ships its
+    self-describing blob; the plain BloomFilter ships its two params.
     """
-    if isinstance(flt, (ShardedBloom, CuckooFilter)):
-        return ("blob", flt.to_bytes())
+    if isinstance(flt, ShardedBloom):
+        return ("sharded", flt.to_bytes())
     return ("plain", flt.n_bits, flt.n_hashes, flt.bits.tobytes())
 
 
-def deserialize_filter(payload: tuple):
-    if payload[0] == "blob":
-        return filter_from_bytes(payload[1])
+def deserialize_filter(payload: tuple) -> BloomFilter:
+    if payload[0] == "sharded":
+        return ShardedBloom.from_bytes(payload[1])
     _, n_bits, n_hashes, raw = payload
     return BloomFilter(n_bits, n_hashes, np.frombuffer(raw, dtype=np.uint8).copy())
-
-
-def filter_from_bytes(raw: bytes):
-    """Dispatch a magic-headed blob to its filter class."""
-    magic = int(np.frombuffer(raw[:8], dtype=np.int64)[0])
-    for cls in (ShardedBloom, CuckooFilter):
-        if magic == cls._MAGIC:
-            return cls.from_bytes(raw)
-    raise ValueError(f"unknown seen-filter blob magic {magic:#x}")
 
 
 # per-Python-worker memo of deserialized seen-filters keyed by a broadcast
@@ -507,15 +263,15 @@ def _memoized_filter(token: str, payload: tuple):
     return flt
 
 
-def bloom_prefilter_unseen(frontier_df: DataFrame, bloom,
+def bloom_prefilter_unseen(frontier_df: DataFrame, bloom: BloomFilter,
                            key: str = "url_hash") -> DataFrame:
     """Drop rows the filter proves unseen... inverted: KEEP rows that are
     definitely-NOT-seen plus the (≤fpp) maybe-seen band for the exact join.
 
-    Accepts any approximate-membership filter (BloomFilter / ShardedBloom /
-    CuckooFilter).  Returns frontier with ``maybe_seen`` boolean — callers
-    route: ``maybe_seen = false`` → fetch directly (the filter guarantees
-    unseen); ``maybe_seen = true`` → exact anti-join backstop.
+    Accepts a BloomFilter or ShardedBloom.  Returns frontier with
+    ``maybe_seen`` boolean — callers route: ``maybe_seen = false`` → fetch
+    directly (the filter guarantees unseen); ``maybe_seen = true`` → exact
+    anti-join backstop.
     """
     import uuid
 
@@ -573,7 +329,7 @@ def filter_unseen_with_bloom_sharded(frontier_df: DataFrame, seen_df: DataFrame,
     and each holding its ~47 MB slice (ShardedBloom doc).  Bit positions are
     identical to the broadcast path (``ShardedBloom.shard_might_contain``),
     so the two variants agree exactly — equivalence-tested alongside the
-    plain/sharded/cuckoo paths.
+    plain/sharded paths.
     """
     assert isinstance(bloom, ShardedBloom) and bloom.shard_bits % 8 == 0
     # shard routing must equal the filter's own uint64 modulo for NEGATIVE

@@ -34,16 +34,17 @@ from pyspark.sql import functions as F
 
 from ..functions.parse_udfs import with_parsed_card
 from ..functions.url import url_hash, url_host
-from ..operators.fetch import fetch_downloaded, fetch_wave, within_retry_budget
+from ..operators.fetch import (
+    DELAY_UNIT_MS, MAX_PERMITTED_DELAY_MS, fetch_downloaded, fetch_wave,
+    within_retry_budget,
+)
 from ..operators.photos import fanin_photos, fanout_photos, validate_image
 from ..operators.politeness import (
     apply_robots, hot_host_list, select_wave, select_wave_salted,
 )
 from ..operators.seen import (
-    CuckooFilter,
     ShardedBloom,
     build_bloom_into,
-    filter_from_bytes,
     filter_not_missing,
     filter_unseen,
     filter_unseen_with_bloom,
@@ -66,19 +67,36 @@ PHOTO_SEQ_SLOT = 64
 
 
 class CrawlJob:
+    # seen prefilter cost gate: while |seen| (a manifest lookup) is below
+    # this, the exact anti-join is cheaper than a prefilter pass over the
+    # whole frontier (BENCH.md §7.1), so no filter exists at all — no
+    # per-wave fold, no blob.  The first wave at or above it builds the
+    # filter once from the seen dirs; later waves fold only their own keys.
+    PREFILTER_MIN_SEEN = 2_000_000
+    BLOOM_CAPACITY = 2_000_000
+    BLOOM_FPP = 0.01
+    BLOOM_SHARDS = 32
+    # hot-host cache for the salted selector (see run_wave)
+    HOT_REFRESH_WAVES = 4
+    HOT_HOST_THRESHOLD = 100_000
+    # F2 fib retry budget: the reference's 100ms unit / 180s cap
+    # (Downloader.fs:134-137)
+    RETRY_DELAY_UNIT_MS = DELAY_UNIT_MS
+    RETRY_MAX_DELAY_MS = MAX_PERMITTED_DELAY_MS
+
     def __init__(self, spark: SparkSession, store_dir: str, pages_df: DataFrame,
                  wave_seconds: int = 3600, robots_df: DataFrame | None = None,
                  use_bloom: bool = False, salted: bool = True,
-                 prewarm: bool = True, bloom_capacity: int = 2_000_000,
-                 bloom_fpp: float = 0.01, bloom_shards: int = 32,
-                 faults_df: DataFrame | None = None,
-                 retry_delay_unit_ms: int | None = None,
-                 retry_max_delay_ms: int | None = None,
-                 seen_filter: str = "bloom",
-                 prefilter_min_seen: int = 2_000_000,
-                 pages_bucketed: bool = False,
-                 hot_refresh_waves: int = 4,
-                 hot_host_threshold: int = 100_000):
+                 prewarm: bool = True, faults_df: DataFrame | None = None,
+                 pages_bucketed: bool = False):
+        """``use_bloom`` puts one :class:`ShardedBloom` in front of the exact
+        seen anti-join once |seen| reaches ``PREFILTER_MIN_SEEN``; the
+        filter is broadcast, or routed shard-by-shard to the tasks holding
+        its key range when its bitmap exceeds
+        ``spark.sql.autoBroadcastJoinThreshold`` (or that setting is -1).
+        ``salted`` selects the skew-safe politeness selector; ``faults_df``
+        (url, fail_attempts) injects transport errors for the F2 retry
+        path; ``pages_bucketed`` marks a ``write_pages_bucketed`` table."""
         self.spark = spark
         self.store = SnapshotStore(store_dir)
         self.pages = pages_df
@@ -98,55 +116,31 @@ class CrawlJob:
         # hot-host cache for the salted selector: the set of hosts above
         # the salting threshold changes slowly between waves, so the
         # per-wave frontier count aggregation is refreshed only every
-        # hot_refresh_waves waves (a stale entry costs a few waves of
+        # HOT_REFRESH_WAVES waves (a stale entry costs a few waves of
         # per-salt rounding or single-task ranking, never a budget
         # violation beyond the documented n_salts-1 overshoot).
-        # Composition-shift guard: a wave whose frontier size estimate
-        # (previous wave's deferred + enqueued_photos — free from the
-        # wave stats) moved outside [0.5x, 2x] of the size at the last
-        # refresh forces an early refresh — this is exactly the
+        # Composition-shift guard: a wave whose frontier size (the row
+        # count of the frontier the previous wave committed — free from
+        # the manifest the head already waits on) moved outside
+        # [0.5x, 2x] of the size at the last refresh forces an early
+        # refresh — this is exactly the
         # card-wave -> photo-wave transition, where a never-seen host
         # (the photo CDN) can arrive already-hot and would otherwise
-        # rank unsalted in one task for up to hot_refresh_waves-1 waves.
-        self.hot_refresh_waves = max(1, hot_refresh_waves)
-        self.hot_host_threshold = hot_host_threshold
+        # rank unsalted in one task for up to HOT_REFRESH_WAVES-1 waves.
         self._hot_hosts: list[str] | None = None
         self._hot_age = 0
-        self._hot_n: int | None = None   # frontier-size est at last refresh
-        self._next_n: int | None = None  # est of the upcoming wave's frontier
-        # F2 fault/retry surface: faults_df (url, fail_attempts) injects
-        # transport errors; the fib budget parameters default to the
-        # reference's 100ms unit / 180s cap (Downloader.fs:134-137)
+        self._hot_n: int | None = None   # frontier size at last refresh
         self.faults = faults_df
-        from ..operators.fetch import DELAY_UNIT_MS, MAX_PERMITTED_DELAY_MS
-        self.retry_delay_unit_ms = retry_delay_unit_ms or DELAY_UNIT_MS
-        self.retry_max_delay_ms = retry_max_delay_ms or MAX_PERMITTED_DELAY_MS
         # wave pipelining state: one shared driver pool; per-table commit
         # chains (a table's next commit waits on its previous one, so
         # snapshot ids can never race); the deferred-finalize queue
         self._pool_obj = None
         self._last_commit: dict = {}
         self._pending: list = []
-        # incremental seen-filter state: the merged filter (bloom or the
-        # deletion-capable cuckoo variant, north_rule "bloom/cuckoo") and the
-        # seen snapshot id it covers; persisted per wave under seen_bloom/ so
-        # a resumed job reloads it instead of rescanning the seen table
-        # "sharded-routed" = same ShardedBloom state, but the wave
-        # prefilter ROUTES each bitmap shard to the tasks holding its key
-        # range (cogroup) instead of broadcasting the whole filter — the
-        # 10^10-key layout where a full filter no longer fits an executor
-        assert seen_filter in ("bloom", "cuckoo", "sharded-routed")
-        self.seen_filter = seen_filter
-        self._filter_degraded = False  # cuckoo overflow -> exact path only
-        # cost gate: while |seen| is below this, the exact anti-join is
-        # cheaper than paying the prefilter UDF over the whole frontier
-        # (measured: at sandbox scale the anti-join won every round), so the
-        # filter is MAINTAINED each wave (cheap driver-side fold) but only
-        # APPLIED once the seen side is big enough to dominate the anti-join
-        self.prefilter_min_seen = prefilter_min_seen
-        self.bloom_capacity = bloom_capacity
-        self.bloom_fpp = bloom_fpp
-        self.bloom_shards = bloom_shards
+        # incremental seen-filter state (exists only once the gate opens):
+        # the merged filter and the seen snapshot id it covers, persisted
+        # per wave under seen_bloom/ so a resumed job reloads it instead of
+        # rescanning the seen table
         self._bloom: ShardedBloom | None = None
         self._bloom_snap = -1
         self._bloom_dir = self.store.root / "seen_bloom"
@@ -169,66 +163,61 @@ class CrawlJob:
         return self.store.read_or_empty(self.spark, table, schema)
 
     # ------------------------------------------------------------------ bloom
+    def _prefilter_on(self) -> bool:
+        """The cost gate, from the manifest's row count (no scan)."""
+        if not self.use_bloom:
+            return False
+        n_seen = self.store.total_rows("seen")
+        return bool(n_seen) and n_seen >= self.PREFILTER_MIN_SEEN
+
     def _bloom_blob_path(self, seen_snap: int):
         return self._bloom_dir / f"merged-{seen_snap}.bin"
 
-    def _bloom_sync(self) -> ShardedBloom | None:
+    def _bloom_sync(self) -> ShardedBloom:
         """Bring the in-memory merged seen-bloom up to the latest seen
-        snapshot WITHOUT rescanning the seen table.
+        snapshot WITHOUT rescanning the seen table (callers hold the open
+        gate, so seen is non-empty).
 
         Fast path: the filter (persisted per wave as a single blob) already
         covers the latest snapshot — zero I/O.  Crash/resume path: load the
         newest blob, then top up from ONLY the snapshot data dirs committed
-        after it (each commit writes exactly one new dir).  A full build
-        happens at most once per store lifetime (legacy store with no blob).
-        Returns None while the seen table is empty (nothing to prefilter).
+        after it (each commit writes exactly one new dir).  With no blob —
+        the first wave at the gate — the top-up is one distributed build
+        over every seen dir.
         """
         latest = self.store.latest_snapshot_id("seen")
-        if latest is None:
-            if self._bloom is None:
-                self._bloom = self._filter_new()
-                self._bloom_snap = -1
-            return None
-        if self._filter_degraded:
-            return None
-        if self._bloom is not None and self._bloom_snap >= latest:
-            return self._bloom
         if self._bloom is None:
-            # newest persisted blob ≤ latest, if any
-            best = -1
-            if self._bloom_dir.exists():
-                for p in self._bloom_dir.glob("merged-*.bin"):
-                    try:
-                        sid = int(p.stem.split("-")[1])
-                    except ValueError:
-                        continue
-                    if best < sid <= latest:
-                        best = sid
-            if best >= 0:
-                self._bloom = filter_from_bytes(
-                    self._bloom_blob_path(best).read_bytes()
+            blobs = []
+            for p in self._bloom_dir.glob("merged-*.bin"):
+                try:
+                    blobs.append(int(p.stem.split("-")[1]))
+                except ValueError:
+                    continue
+            best = max((sid for sid in blobs if sid <= latest), default=-1)
+            self._bloom = (
+                ShardedBloom.from_bytes(self._bloom_blob_path(best).read_bytes())
+                if best >= 0
+                else ShardedBloom.sized(
+                    self.BLOOM_CAPACITY, self.BLOOM_FPP, self.BLOOM_SHARDS
                 )
-                self._bloom_snap = best
-            else:
-                self._bloom = self._filter_new()
-                self._bloom_snap = -1
+            )
+            self._bloom_snap = best
         if self._bloom_snap < latest:
             dirs = self.store.data_dirs_between("seen", self._bloom_snap, latest)
             if dirs:
                 delta = self.spark.read.parquet(*dirs).select("url_hash")
                 self._filter_add(delta)
             self._bloom_snap = latest
-            if self._filter_degraded:
-                return None
             self._persist_bloom()
         return self._bloom
 
-    def _filter_new(self):
-        if self.seen_filter == "cuckoo":
-            return CuckooFilter.sized(self.bloom_capacity)
-        return ShardedBloom.sized(
-            self.bloom_capacity, self.bloom_fpp, self.bloom_shards
-        )
+    def _routed(self, bloom: ShardedBloom) -> bool:
+        """Route the prefilter shard-by-shard (cogroup) instead of
+        broadcasting it when the bitmap exceeds Spark's own broadcast
+        limit — the observed size picks the layout, not a user switch."""
+        limit = self.spark._jsparkSession.sessionState().conf() \
+            .autoBroadcastJoinThreshold()
+        return limit < 0 or bloom.bits.nbytes > limit
 
     # a wave's keys below this come to the driver as one Arrow batch and
     # fold in-process (milliseconds); above it, the distributed mapInPandas
@@ -238,44 +227,19 @@ class CrawlJob:
     DRIVER_FOLD_MAX_ROWS = 2_000_000
 
     def _filter_add(self, keys_df: DataFrame, n_rows: int | None = None) -> None:
-        """Fold a key DataFrame into the in-memory filter.
+        """Fold a key DataFrame into the in-memory filter: one driver-side
+        Arrow fetch + vectorized ``add_many`` for a small/known wave;
+        distributed mapInPandas partials, OR-merged (bytes move, not rows),
+        for an unknown or huge input (a full build)."""
+        if n_rows is not None and n_rows <= self.DRIVER_FOLD_MAX_ROWS:
+            import numpy as _np
 
-        Bloom, small/known wave: one driver-side Arrow fetch + vectorized
-        ``add_many``.  Bloom, unknown or huge input (legacy full rebuild):
-        distributed mapInPandas partials, OR-merged (bytes move, not rows).
-        Cuckoo: driver-side vectorized insert — bounded because only
-        politeness-bounded waves are ever added; a cuckoo overflow
-        (capacity undersized) would mean false negatives, so it DEGRADES
-        the job to the exact anti-join path instead (correctness is never
-        at stake).
-        """
-        import numpy as _np
-
-        if isinstance(self._bloom, CuckooFilter):
-            keys = keys_df.toPandas()["url_hash"].to_numpy(_np.int64)
-            if self._bloom.insert_many(keys):
-                self._filter_degraded = True
-        elif n_rows is not None and n_rows <= self.DRIVER_FOLD_MAX_ROWS:
             keys = keys_df.toPandas()["url_hash"].to_numpy(_np.int64)
             self._bloom.add_many(keys)
         else:
             partial = build_bloom_into(keys_df, self._bloom.empty_like())
             self._bloom.bits |= partial.bits
             self._bloom.n_items += partial.n_items
-
-    def _bloom_add_wave(self, wave_keys_df: DataFrame, seen_snap: int,
-                        n_rows: int | None = None) -> None:
-        """Fold the freshly committed wave's keys into the merged filter and
-        persist — the only per-wave filter work (the wave, never the table)."""
-        if self._bloom is None:
-            # first wave with anything stored: seen was empty until now, so
-            # the sync path had nothing to load — start a fresh filter
-            self._bloom = self._filter_new()
-            self._bloom_snap = -1
-        self._filter_add(wave_keys_df, n_rows)
-        self._bloom_snap = seen_snap
-        if not self._filter_degraded:
-            self._persist_bloom()
 
     def _persist_bloom(self) -> None:
         import os
@@ -429,30 +393,18 @@ class CrawlJob:
         wave_persisted: list = []  # prefilter caches to release at wave end
         if self.store.total_rows("seen") == 0:
             pass  # wave 0 (or nothing stored yet): no seen filter at all
-        elif self.use_bloom:
-            seen = self._read("seen", SEEN_SCHEMA)
+        elif self._prefilter_on():
             # incremental filter: covers all committed seen snapshots without
             # rescanning the seen table (per-wave folds; the exact anti-join
-            # backstop guarantees correctness).  None ⇒ seen empty or the
-            # cuckoo overflowed (degraded) — either way the exact anti-join
-            # is the safe path (a no-op against an empty seen table).  The
-            # cost gate keeps the exact path while |seen| is small enough
-            # that the anti-join beats a prefilter pass over the frontier.
+            # backstop guarantees correctness)
             bloom = self._bloom_sync()
-            use_prefilter = (
-                bloom is not None and bloom.n_items >= self.prefilter_min_seen
-            )
             prefilter_fn = (
-                filter_unseen_with_bloom_sharded
-                if self.seen_filter == "sharded-routed"
+                filter_unseen_with_bloom_sharded if self._routed(bloom)
                 else filter_unseen_with_bloom
             )
-            frontier = (
-                prefilter_fn(
-                    frontier, seen, bloom, persisted_out=wave_persisted
-                )
-                if use_prefilter
-                else filter_unseen(frontier, seen)
+            frontier = prefilter_fn(
+                frontier, self._read("seen", SEEN_SCHEMA), bloom,
+                persisted_out=wave_persisted,
             )
         else:
             frontier = filter_unseen(
@@ -465,21 +417,24 @@ class CrawlJob:
         t0 = _mark("seen_missing_filters", t0)
 
         # F3: politeness token bucket.  The salted path reuses the cached
-        # hot-host list (refreshed every hot_refresh_waves) so the steady-
+        # hot-host list (refreshed every HOT_REFRESH_WAVES) so the steady-
         # state wave pays ONE frontier scan + ONE shuffle instead of a
         # count aggregation job per wave.
         if self.salted:
-            est = self._next_n
+            # frontier size for the composition-shift check; None on the
+            # job's first wave, so its second wave — the card -> photo
+            # transition of a seeded crawl — always refreshes
+            est = n_frontier if self._hot_hosts is not None else None
             shifted = est is not None and (
                 self._hot_n is None
                 or not (self._hot_n // 2 <= est <= self._hot_n * 2)
             )
             if (self._hot_hosts is None
-                    or self._hot_age >= self.hot_refresh_waves
+                    or self._hot_age >= self.HOT_REFRESH_WAVES
                     or shifted):
                 self._hot_hosts = sorted(
                     r["host"] for r in hot_host_list(
-                        frontier, self.hot_host_threshold
+                        frontier, self.HOT_HOST_THRESHOLD
                     ).collect()
                 )
                 self._hot_age = 0
@@ -686,8 +641,8 @@ class CrawlJob:
             .where(
                 within_retry_budget(
                     F.col("attempt"),
-                    self.retry_delay_unit_ms,
-                    self.retry_max_delay_ms,
+                    self.RETRY_DELAY_UNIT_MS,
+                    self.RETRY_MAX_DELAY_MS,
                 )
             )
             .withColumn("attempt", F.col("attempt") + 1)
@@ -704,19 +659,20 @@ class CrawlJob:
             return run
 
         def _seen_then_bloom():
-            # seen = successfully STORED resources; the bloom fold chains
-            # onto the commit inside the same thread (it needs the snapshot
-            # id) — this wave's keys only, the seen table is never rescanned
-            # after wave 0, and small waves fold driver-side in milliseconds.
+            # seen = successfully STORED resources; once the gate has built
+            # the filter, the bloom fold chains onto the commit inside the
+            # same thread (it needs the snapshot id) — this wave's keys
+            # only, folded driver-side in milliseconds, then persisted
             snap = self.store.commit("seen", seen_rows)
-            if self.use_bloom:
-                self._bloom_add_wave(
+            if self._bloom is not None:
+                self._filter_add(
                     fetched.where(F.col("fetch_status") == "downloaded").select(
                         "url_hash"
                     ),
-                    snap,
                     n_rows=int(frow["downloaded"] or 0),
                 )
+                self._bloom_snap = snap
+                self._persist_bloom()
             return snap
 
         fut = {
@@ -781,12 +737,6 @@ class CrawlJob:
             stats["parsed_ok"] = results["parsed_ok"]
             stats["deferred"] = int(prow["n"]) - int(prow["selected"] or 0)
             stats["enqueued_photos"] = results["enqueued_photos"]
-            # next wave's frontier size estimate, feeding the hot-host
-            # composition-shift refresh (benign race under pipelining: a
-            # missed update only delays the refresh to the age trigger)
-            self._next_n = int(stats["deferred"]) + int(
-                stats["enqueued_photos"] or 0
-            )
             import json as _json
 
             return self.spark.createDataFrame(
@@ -855,11 +805,11 @@ class CrawlJob:
         Ordering is load-bearing for the incremental seen-filter: expiry
         drops manifest lines, and a filter blob older than the expiry
         horizon could no longer see those lines' data dirs to top up from —
-        bloom false negatives, i.e. re-crawling seen urls.  So after
-        compacting ``seen`` the filter is REBUILT from the compacted
-        snapshot (one single-dir scan, accurate n_items for the cost gate),
-        persisted, and older blobs are pruned — only then does history
-        expire.  Resume always reads latest, which is never expired.
+        bloom false negatives, i.e. re-crawling seen urls.  So every blob
+        is deleted BEFORE ``seen`` history expires, and afterwards, while
+        the gate is open, the filter is rebuilt from what survives — the
+        compacted snapshot's dir — and persisted.  Resume always reads
+        latest, which is never expired.
 
         Returns {table: {"compacted_to": id|None, "expired": n,
         "deleted_dirs": n}}.
@@ -867,26 +817,16 @@ class CrawlJob:
         out = {}
         for table in self.store.tables():
             snap = self.store.compact(self.spark, table)
-            if table == "seen" and self.use_bloom and not self._filter_degraded:
-                latest = self.store.latest_snapshot_id("seen")
-                if latest is not None:
-                    df = self.store.read(self.spark, "seen").select("url_hash")
-                    self._bloom = self._filter_new()
-                    self._filter_add(df, n_rows=df.count())
-                    self._bloom_snap = latest
-                    if not self._filter_degraded:
-                        self._persist_bloom()
-                        for p in self._bloom_dir.glob("merged-*.bin"):
-                            try:
-                                sid = int(p.stem.split("-")[1])
-                            except ValueError:
-                                continue
-                            if sid < latest:
-                                p.unlink()
+            if table == "seen":
+                for p in self._bloom_dir.glob("merged-*.bin"):
+                    p.unlink()
+                self._bloom = None
             out[table] = {
                 "compacted_to": snap,
                 **self.store.expire_snapshots(table, keep_last=keep_last),
             }
+        if self._prefilter_on():
+            self._bloom_sync()
         return out
 
     # ------------------------------------------------------------------ reads
@@ -970,21 +910,14 @@ class CrawlJob:
             refetch.select("url_hash"), "url_hash", "left_anti"
         )
         # bring the seen-filter up to date BEFORE the overwrite: it then
-        # covers a superset of the healed table without ever re-reading it
-        flt = self._bloom_sync() if self.use_bloom else None
+        # covers a superset of the healed table without ever re-reading it.
+        # The healed keys stay in it as stale false positives — the exact
+        # anti-join backstop confirms them unseen.
+        synced = self._prefilter_on()
+        if synced:
+            self._bloom_sync()
         self.store.commit("seen", healed_seen, mode="overwrite")
-        if flt is not None and not self._filter_degraded:
-            if isinstance(flt, CuckooFilter):
-                # the deletion-capable variant removes the healed keys so
-                # the prefilter stays precise; a bloom keeps them as stale
-                # false positives (correct either way — the exact anti-join
-                # backstop decides)
-                import numpy as _np
-
-                keys = refetch.select("url_hash").toPandas()["url_hash"].to_numpy(
-                    _np.int64
-                )
-                flt.delete_many(keys)
+        if synced:
             self._bloom_snap = self.store.latest_snapshot_id("seen")
             self._persist_bloom()
         self.enqueue_frontier(refetch)

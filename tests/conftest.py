@@ -21,3 +21,9 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_TEST_DIR
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: long-running test (still part of the default run)"
+    )

@@ -23,6 +23,20 @@ from crawler_spark.sources.frontier import frontier_from_range, known_set_from_c
 from crawler_spark.sources.pages import NUM_BASE, build_pages, fixture_pages
 
 
+def _count_calls(monkeypatch, owner, name):
+    """Wrap ``owner.name`` so every call appends its positional args to the
+    returned list."""
+    calls: list[tuple] = []
+    real = getattr(owner, name)
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(owner, name, spy)
+    return calls
+
+
 # --------------------------------------------------------------------- frontier
 def test_frontier_range_order(spark):
     """S1: rf{n} then rl{n}, n ascending (Utils.fs:19-24) — seq is total."""
@@ -78,7 +92,7 @@ def test_bloom_no_false_negatives():
     assert fp < 0.05  # fpp in the configured ballpark
 
 
-@pytest.mark.parametrize("kind", ["plain", "sharded", "cuckoo", "routed"])
+@pytest.mark.parametrize("kind", ["plain", "sharded", "routed"])
 def test_filter_path_equals_exact_antijoin(spark, kind):
     """Every filter variant is a prefilter, never a semantics change — the
     'sharded' case is the regression guard for type-preserving broadcast
@@ -86,10 +100,7 @@ def test_filter_path_equals_exact_antijoin(spark, kind):
     different bit positions → silent false negatives); the 'routed' case
     runs the executor-routed shard-cogroup variant (each task sees only its
     shard's bitmap slice) against the same exact baseline."""
-    import numpy as np
-
     from crawler_spark.operators.seen import (
-        CuckooFilter,
         ShardedBloom,
         build_bloom_into,
         filter_unseen_with_bloom_sharded,
@@ -102,49 +113,16 @@ def test_filter_path_equals_exact_antijoin(spark, kind):
     exact = {r["id"] for r in filter_unseen(frontier, seen).collect()}
     if kind == "plain":
         flt = build_bloom(seen)
-    elif kind in ("sharded", "routed"):
+    else:
         flt = build_bloom_into(
             seen.select("url_hash"), ShardedBloom.sized(2_000, n_shards=8)
         )
-    else:
-        flt = CuckooFilter.sized(2_000)
-        keys = np.array(
-            [r["url_hash"] for r in seen.select("url_hash").collect()],
-            dtype=np.int64,
-        )
-        assert flt.insert_many(keys) == 0
     variant = (
         filter_unseen_with_bloom_sharded if kind == "routed"
         else filter_unseen_with_bloom
     )
     with_flt = {r["id"] for r in variant(frontier, seen, flt).collect()}
     assert with_flt == exact
-
-
-def test_cuckoo_filter_semantics():
-    """Insert → no false negatives; idempotent re-insert; delete removes;
-    serialization round-trips through the magic-dispatched loader."""
-    import numpy as np
-
-    from crawler_spark.operators.seen import CuckooFilter, filter_from_bytes
-
-    cf = CuckooFilter.sized(10_000)
-    keys = np.arange(10_000, dtype=np.int64) * 2_654_435_761
-    assert cf.insert_many(keys) == 0
-    assert cf.might_contain(keys).all()          # zero false negatives
-    assert cf.insert_many(keys[:100]) == 0       # idempotent (no dup fps)
-
-    probe = np.arange(50_000, 60_000, dtype=np.int64)
-    assert cf.might_contain(probe).mean() < 0.01  # 16-bit fp → tiny fpp
-
-    cf2 = filter_from_bytes(cf.to_bytes())
-    assert isinstance(cf2, CuckooFilter)
-    assert cf2.might_contain(keys).all()
-
-    # deletion — the capability blooms lack (drives revalidate precision)
-    assert cf.delete_many(keys[:5_000]) == 0
-    assert not cf.might_contain(keys[:5_000]).any()
-    assert cf.might_contain(keys[5_000:]).all()
 
 
 # ----------------------------------------------------------------- politeness
@@ -168,6 +146,18 @@ def test_token_bucket_salted_matches_budget_scale(spark):
     assert exact == 20
     # per-salt rounding: within n_salts of the exact budget
     assert abs(salted - exact) <= 4
+
+    # a caller's hot-host list may repeat a host: same rows, same picks
+    def picks(hosts):
+        out = select_wave_salted(
+            frontier, 1200, n_salts=4,
+            hot_hosts=spark.createDataFrame([(h,) for h in hosts], "host string"),
+        )
+        return out.count(), {r["id"] for r in out.where("selected").collect()}
+
+    once, twice = picks(["pet911.ru"]), picks(["pet911.ru", "pet911.ru"])
+    assert once[0] == frontier.count()
+    assert twice == once
 
 
 def test_robots_anti_join(spark):
@@ -379,7 +369,7 @@ def test_e2e_photo_mime_and_ext(crawl_result):
     assert cards and all(r["mime"] == "text/html; charset=utf-8" for r in cards)
 
 
-def test_e2e_retry_fib_budget(spark, sf_dir, tmp_path_factory):
+def test_e2e_retry_fib_budget(spark, sf_dir, tmp_path_factory, monkeypatch):
     """F2 e2e (Downloader.fs:154-182): a transport-erroring url re-enters
     the next wave with attempt+1 until it heals or the fibonacci delay
     budget is exhausted.
@@ -406,10 +396,10 @@ def test_e2e_retry_fib_budget(spark, sf_dir, tmp_path_factory):
     faults = spark.createDataFrame(
         [(url_a, 2), (url_b, 999)], "url string, fail_attempts int"
     )
+    monkeypatch.setattr(CrawlJob, "RETRY_DELAY_UNIT_MS", 30_000)
     job = CrawlJob(
         spark, str(tmp_path_factory.mktemp("faults")), pages,
-        wave_seconds=10**9, faults_df=faults,
-        retry_delay_unit_ms=30_000, prewarm=False,
+        wave_seconds=10**9, faults_df=faults, prewarm=False,
     )
     job.seed_range(NUM_BASE, NUM_BASE + 9)
     job.crawl(max_waves=20)
@@ -440,14 +430,17 @@ def test_e2e_retry_fib_budget(spark, sf_dir, tmp_path_factory):
 
 def test_e2e_incremental_bloom(crawl_result, spark, sf_dir, tmp_path_factory,
                                monkeypatch):
-    """C1-scale: the seen-bloom is maintained incrementally — one per-wave
-    fold over that wave's keys only (driver-side Arrow fold for bounded
-    waves, distributed partials for rebuilds), never a rescan of the seen
-    table — persisted per snapshot, reloadable after a restart, and
-    semantically identical to the exact-anti-join run.  prefilter_min_seen=0
-    keeps the bloom-routed wave path itself exercised end-to-end."""
+    """C1-scale: once the gate opens the seen-bloom is built ONCE (one
+    distributed build over the seen dirs) and then maintained
+    incrementally — one per-wave driver-side fold over that wave's keys
+    only, never a rescan of the seen table — persisted per snapshot,
+    reloadable after a restart, and semantically identical to the
+    exact-anti-join run.  PREFILTER_MIN_SEEN=0 opens the gate as soon as
+    seen is non-empty, so the bloom wave path itself runs end-to-end."""
     import crawler_spark.plans.crawl_job as cj
 
+    monkeypatch.setattr(CrawlJob, "PREFILTER_MIN_SEEN", 0)
+    prefiltered = _count_calls(monkeypatch, cj, "filter_unseen_with_bloom")
     calls: list[int] = []
     real = cj.CrawlJob._filter_add
 
@@ -461,15 +454,18 @@ def test_e2e_incremental_bloom(crawl_result, spark, sf_dir, tmp_path_factory,
     pages = ref_job.pages
     store = str(tmp_path_factory.mktemp("bloomstore"))
     job = CrawlJob(spark, store, pages, wave_seconds=10**9, use_bloom=True,
-                   prewarm=False, prefilter_min_seen=0)
+                   prewarm=False)
     job.seed_frontier(ref_job.store.read(spark, "frontier", as_of=0))
     job.crawl(max_waves=10)
 
     n_waves = job.store.latest_snapshot_id("seen") + 1
-    # exactly one fold per wave, each over that wave's rows only; summed
-    # they cover the seen table once — no wave rescanned history
+    # wave 0 stores into an empty seen table (no filter yet); wave 1's head
+    # builds the filter from wave 0's dir, and every later wave folds its
+    # own rows: n_waves folds that, summed, cover the seen table once — no
+    # wave rescanned history.  Every wave after 0 ran the prefilter.
     assert len(calls) == n_waves
     assert sum(calls) == job.seen_set().count()
+    assert len(prefiltered) == n_waves - 1
     # the filter's item count tracks the folds (the cost-gate input) and
     # survives the per-snapshot blob round-trip
     assert job._bloom.n_items == job.seen_set().count()
@@ -480,7 +476,7 @@ def test_e2e_incremental_bloom(crawl_result, spark, sf_dir, tmp_path_factory,
     # restart: a fresh job loads the blob — no partial build, no table read
     calls.clear()
     job2 = CrawlJob(spark, store, pages, wave_seconds=10**9, use_bloom=True,
-                    prewarm=False, prefilter_min_seen=0)
+                    prewarm=False)
     bloom = job2._bloom_sync()
     assert calls == [] and job2._bloom_snap == n_waves - 1
     assert bloom is not None
@@ -490,7 +486,7 @@ def test_e2e_incremental_bloom(crawl_result, spark, sf_dir, tmp_path_factory,
     for b in blobs:
         b.unlink()
     job3 = CrawlJob(spark, store, pages, wave_seconds=10**9, use_bloom=True,
-                    prewarm=False, prefilter_min_seen=0)
+                    prewarm=False)
     job3._bloom_sync()
     assert len(calls) == 1 and sum(calls) == job.seen_set().count()
 
@@ -502,6 +498,38 @@ def test_e2e_incremental_bloom(crawl_result, spark, sf_dir, tmp_path_factory,
             da.select(cols).exceptAll(db.select(cols)).count() == 0
             and db.select(cols).exceptAll(da.select(cols)).count() == 0
         ), f"{getter} differs between bloom and exact runs"
+
+
+def test_e2e_bloom_absent_below_gate(crawl_result, spark, tmp_path_factory,
+                                    monkeypatch):
+    """Below the cost gate the seen filter does not exist: a use_bloom
+    crawl whose |seen| stays under PREFILTER_MIN_SEEN folds nothing and
+    writes no blob.  A blob an open-gate session left behind is deleted by
+    maintain() once the gate is closed, so no blob can outlive the seen
+    dirs that expiry removes."""
+    import crawler_spark.plans.crawl_job as cj
+
+    folds = _count_calls(monkeypatch, cj.CrawlJob, "_filter_add")
+    ref_job, _, _ = crawl_result
+    job = CrawlJob(spark, str(tmp_path_factory.mktemp("gatestore")),
+                   ref_job.pages, wave_seconds=10**9, use_bloom=True,
+                   prewarm=False)
+    job.seed_frontier(ref_job.store.read(spark, "frontier", as_of=0))
+    job.crawl(max_waves=10)
+
+    bloom_dir = job.store.root / "seen_bloom"
+    assert folds == []
+    assert not bloom_dir.exists()
+    assert 0 < job.seen_set().count() < CrawlJob.PREFILTER_MIN_SEEN
+
+    gate = CrawlJob.PREFILTER_MIN_SEEN
+    monkeypatch.setattr(CrawlJob, "PREFILTER_MIN_SEEN", 0)
+    job._bloom_sync()
+    assert list(bloom_dir.glob("merged-*.bin"))
+    monkeypatch.setattr(CrawlJob, "PREFILTER_MIN_SEEN", gate)
+    job.maintain()
+    assert list(bloom_dir.glob("merged-*.bin")) == []
+    assert job._bloom is None
 
 
 def test_e2e_bucketed_pages_crawl_matches(crawl_result, spark, tmp_path_factory):
@@ -632,13 +660,18 @@ def test_e2e_crawl_over_deduped_archives_matches(
 
 
 def test_e2e_maintain_compacts_and_resume_stays_exact(
-        spark, sf_dir, tmp_path_factory):
+        spark, sf_dir, tmp_path_factory, monkeypatch):
     """Store maintenance between crawl sessions must not change results:
     run A crawls range 1 then range 2 straight; run B crawls range 1,
     maintains (compact + expire, seen-filter rebuilt from the compacted
     snapshot), then a NEW job seeds range 2 and crawls.  The rebuilt bloom
     must keep suppressing range 1 (no false negatives after expiry) and
-    admit range 2; final tables identical."""
+    admit range 2; final tables identical.  PREFILTER_MIN_SEEN=0 makes
+    the resumed waves really run through the rebuilt bloom."""
+    import crawler_spark.plans.crawl_job as cj
+
+    monkeypatch.setattr(CrawlJob, "PREFILTER_MIN_SEEN", 0)
+    prefiltered = _count_calls(monkeypatch, cj, "filter_unseen_with_bloom")
     pages = build_pages(spark, sf_dir)
 
     def run(store, with_maintain):
@@ -651,12 +684,19 @@ def test_e2e_maintain_compacts_and_resume_stays_exact(
             assert res["seen"]["compacted_to"] is not None
             assert res["seen"]["expired"] >= 2
             assert len(job.store.snapshots("seen")[-1]["dirs"]) == 1
+            # only the blob rebuilt over the compacted snapshot survives
+            latest = job.store.latest_snapshot_id("seen")
+            blobs = (job.store.root / "seen_bloom").glob("merged-*.bin")
+            assert [p.name for p in blobs] == [f"merged-{latest}.bin"]
             job = CrawlJob(spark, store, pages, wave_seconds=10**9,
                            use_bloom=True)
+            prefiltered.clear()
         job.enqueue_frontier(
             frontier_from_range(spark, NUM_BASE, NUM_BASE + 59)
         )  # overlaps range 1
         job.crawl(max_waves=10)
+        if with_maintain:
+            assert prefiltered
         return job
 
     a = run(str(tmp_path_factory.mktemp("a")), with_maintain=False)
@@ -675,21 +715,32 @@ def test_e2e_maintain_compacts_and_resume_stays_exact(
 
 
 def test_e2e_sharded_routed_seen_filter_matches_broadcast(
-    spark, crawl_result, tmp_path_factory
+    spark, crawl_result, tmp_path_factory, monkeypatch
 ):
-    """seen_filter="sharded-routed": the wave prefilter cogroups each bloom
-    bitmap shard with the frontier rows that can only probe it (the
-    10^10-key layout where the merged filter no longer broadcasts) — final
-    crawl state must equal the exact-anti-join reference run, and the wave
-    plan must actually route via cogroup (FlatMapCoGroupsInPandas)."""
+    """With broadcasts off (autoBroadcastJoinThreshold=-1) the wave
+    prefilter cogroups each bloom bitmap shard with the frontier rows that
+    can only probe it (the 10^10-key layout where the merged filter no
+    longer broadcasts) — final crawl state must equal the exact-anti-join
+    reference run, and the wave plan must actually route via cogroup
+    (FlatMapCoGroupsInPandas)."""
+    import crawler_spark.plans.crawl_job as cj
+
+    monkeypatch.setattr(CrawlJob, "PREFILTER_MIN_SEEN", 0)
+    routed = _count_calls(monkeypatch, cj, "filter_unseen_with_bloom_sharded")
     ref_job, _, n_docs = crawl_result
     pages = ref_job.pages
     store = str(tmp_path_factory.mktemp("routedstore"))
-    job = CrawlJob(spark, store, pages, wave_seconds=10**9, use_bloom=True,
-                   prewarm=False, prefilter_min_seen=0,
-                   seen_filter="sharded-routed")
-    job.seed_frontier(ref_job.store.read(spark, "frontier", as_of=0))
-    job.crawl(max_waves=10)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        job = CrawlJob(spark, store, pages, wave_seconds=10**9,
+                       use_bloom=True, prewarm=False)
+        job.seed_frontier(ref_job.store.read(spark, "frontier", as_of=0))
+        job.crawl(max_waves=10)
+    finally:
+        spark.conf.set(key, prev)
+    assert routed
 
     for getter in ("cards", "seen_set", "missing_set"):
         da, db = getattr(ref_job, getter)(), getattr(job, getter)()
@@ -711,15 +762,16 @@ def test_e2e_sharded_routed_seen_filter_matches_broadcast(
     assert "FlatMapCoGroupsInPandas" in plan
 
 
-def test_corrupt_heal_through_resumed_cuckoo_job_equals_clean_run(
-        spark, tmp_path):
+def test_corrupt_heal_through_resumed_bloom_job_equals_clean_run(
+        spark, tmp_path, monkeypatch):
     """C4 self-heal across a RESUME boundary (VERDICT r4 item 5): a card
     corrupted in the stored crawl is healed by a brand-new CrawlJob over
-    the same store — the persisted cuckoo filter reloads from its blob,
-    the revalidation sweep DELETES the healed key from it, the re-crawl
-    re-adds it — and the final store state is indistinguishable from a
-    crawl that never saw the corruption."""
-    from crawler_spark.plans.crawl_job import CrawlJob
+    the same store — the persisted bloom reloads from its blob, the healed
+    key stays in it as a stale false positive, and the prefiltered re-crawl
+    sends it through the exact anti-join, which confirms it unseen — and
+    the final store state is indistinguishable from a crawl that never saw
+    the corruption.  PREFILTER_MIN_SEEN=0 keeps the bloom in the path."""
+    import crawler_spark.plans.crawl_job as cj
     from crawler_spark.sources.pages import (
         NUM_BASE, build_pages, synthetic_docs_from_range,
     )
@@ -745,31 +797,33 @@ def test_corrupt_heal_through_resumed_cuckoo_job_equals_clean_run(
                    job.seen_set().select("url_hash").distinct().collect()),
         )
 
+    monkeypatch.setattr(CrawlJob, "PREFILTER_MIN_SEEN", 0)
     # baseline: never-corrupted run
     clean_job = CrawlJob(spark, str(tmp_path / "clean"), pages,
-                         wave_seconds=3600 * 1000, use_bloom=True,
-                         seen_filter="cuckoo")
+                         wave_seconds=3600 * 1000, use_bloom=True)
     clean_job.seed_range(NUM_BASE, NUM_BASE + 9)
     clean_job.crawl()
     want = final_state(clean_job)
 
     # run 1 crawls the corrupted universe, then "shuts down"
     job1 = CrawlJob(spark, str(tmp_path / "store"), broken,
-                    wave_seconds=3600 * 1000, use_bloom=True,
-                    seen_filter="cuckoo")
+                    wave_seconds=3600 * 1000, use_bloom=True)
     job1.seed_range(NUM_BASE, NUM_BASE + 9)
     job1.crawl()
     assert job1.cards().where(F.col("error").isNotNull()).count() == 1
     del job1
 
     # run 2: fresh job over the SAME store against the healed universe —
-    # cuckoo state must come from the persisted blob, not job1's memory
+    # the filter must come from the persisted blob (no fold, no build),
+    # not job1's memory
+    folds = _count_calls(monkeypatch, cj.CrawlJob, "_filter_add")
+    prefiltered = _count_calls(monkeypatch, cj, "filter_unseen_with_bloom")
     job2 = CrawlJob(spark, str(tmp_path / "store"), pages,
-                    wave_seconds=3600 * 1000, use_bloom=True,
-                    seen_filter="cuckoo")
+                    wave_seconds=3600 * 1000, use_bloom=True)
     assert job2.revalidate_cards() == {"revalidated": 1}
-    assert not job2._filter_degraded
+    assert folds == [] and job2._bloom is not None
     job2.crawl()
+    assert prefiltered
 
     assert final_state(job2) == want
     # idempotence: a later sweep finds nothing to heal, enqueues nothing
@@ -777,12 +831,13 @@ def test_corrupt_heal_through_resumed_cuckoo_job_equals_clean_run(
     assert job2.pending_frontier().isEmpty()
 
 
-def test_hot_host_cache_refreshes_on_composition_shift(spark, tmp_path):
+def test_hot_host_cache_refreshes_on_composition_shift(spark, tmp_path,
+                                                      monkeypatch):
     """The cached hot-host list must pick up a host that FIRST appears in
     a later wave (the photo CDN arrives in wave 2 already-hot): the
     composition-shift trigger (next-frontier estimate outside [0.5x,2x]
     of the last refresh) forces an early refresh, so the CDN is salted
-    without waiting out hot_refresh_waves.  Results stay identical to
+    without waiting out HOT_REFRESH_WAVES.  Results stay identical to
     the exact selector."""
     from crawler_spark.plans.crawl_job import CrawlJob
     from crawler_spark.sources.pages import (
@@ -792,14 +847,15 @@ def test_hot_host_cache_refreshes_on_composition_shift(spark, tmp_path):
     docs = synthetic_docs_from_range(spark, 120)
     pages = build_pages(spark, "", include_fixtures=False, docs_df=docs)
 
+    monkeypatch.setattr(CrawlJob, "HOT_REFRESH_WAVES", 10)
+    monkeypatch.setattr(CrawlJob, "HOT_HOST_THRESHOLD", 50)
     job = CrawlJob(spark, str(tmp_path / "salted"), pages,
-                   wave_seconds=3600 * 1000, hot_refresh_waves=10,
-                   hot_host_threshold=50)
+                   wave_seconds=3600 * 1000)
     job.seed_range(NUM_BASE, NUM_BASE + 119)
     job.crawl()
     # wave 1's refresh could only see pet911.ru; the CDN host carries the
     # photo frontier and must have been picked up by the shift trigger
-    # (hot_refresh_waves=10 means the age trigger can NOT have fired)
+    # (HOT_REFRESH_WAVES=10 means the age trigger can NOT have fired)
     assert "cdn.pet911.ru" in (job._hot_hosts or [])
 
     exact = CrawlJob(spark, str(tmp_path / "exact"), pages,

@@ -62,23 +62,32 @@ def test_mime_to_ext_mapping(spark):
     assert got == ["jpg", "jpg", "png", "webp", None]   # Images.fs:26-34
 
 
-@pytest.mark.parametrize("use_bloom,seen_filter", [
-    (False, "bloom"), (True, "bloom"), (True, "cuckoo"),
-])
-def test_revalidate_reenqueues_failed_parses(spark, tmp_path, use_bloom,
-                                             seen_filter):
+@pytest.mark.parametrize("use_bloom", [False, True],
+                         ids=["False-bloom", "True-bloom"])
+def test_revalidate_reenqueues_failed_parses(spark, tmp_path, monkeypatch,
+                                             use_bloom):
     """A card whose stored parse failed is dropped from seen and re-enters
     the frontier; a second crawl against a FIXED universe re-fetches it.
 
-    With the bloom the healed card's url_hash is STALE in the filter
-    (blooms can't delete) — it must route through the maybe-seen band into
-    the exact anti-join, which confirms it unseen and re-fetches it.  The
-    cuckoo variant DELETES the healed key during the sweep and must behave
-    identically end-to-end."""
+    With the bloom (gate opened by PREFILTER_MIN_SEEN=0) the healed card's
+    url_hash is STALE in the filter (blooms can't delete) — it must route
+    through the maybe-seen band into the exact anti-join, which confirms it
+    unseen and re-fetches it."""
+    import crawler_spark.plans.crawl_job as cj
     from crawler_spark.plans.crawl_job import CrawlJob
     from crawler_spark.sources.pages import (
         NUM_BASE, build_pages, synthetic_docs_from_range,
     )
+
+    monkeypatch.setattr(CrawlJob, "PREFILTER_MIN_SEEN", 0)
+    prefiltered = []
+    real = cj.filter_unseen_with_bloom
+
+    def spy(*args, **kwargs):
+        prefiltered.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(cj, "filter_unseen_with_bloom", spy)
 
     docs = synthetic_docs_from_range(spark, 10)
     pages = build_pages(spark, "", include_fixtures=False, docs_df=docs)
@@ -92,8 +101,7 @@ def test_revalidate_reenqueues_failed_parses(spark, tmp_path, use_bloom,
     ).withColumn("html", F.encode(F.col("text"), "UTF-8"))
 
     job = CrawlJob(spark, str(tmp_path / "store"), broken,
-                   wave_seconds=3600 * 1000, use_bloom=use_bloom,
-                   seen_filter=seen_filter)
+                   wave_seconds=3600 * 1000, use_bloom=use_bloom)
     job.seed_range(NUM_BASE, NUM_BASE + 9)
     job.crawl()
     bad_before = job.cards().where(F.col("error").isNotNull()).count()
@@ -103,7 +111,10 @@ def test_revalidate_reenqueues_failed_parses(spark, tmp_path, use_bloom,
     job.pages = pages
     out = job.revalidate_cards()
     assert out["revalidated"] == 1
+    prefiltered.clear()
     job.crawl()
+    # the re-crawl really went through the bloom iff it is enabled
+    assert bool(prefiltered) == use_bloom
     latest_bad = (
         job.cards().where(F.col("id") == f"rf{NUM_BASE + 2}")
         .orderBy(F.col("error").isNull().desc())

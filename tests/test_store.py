@@ -157,3 +157,30 @@ def test_snapshot_summary_row_counts(spark, tmp_path):
     _commit_range(spark, store, "t", 7, 9)
     assert store.snapshots("t")[-1]["rows"] == 2
     assert store.total_rows("t") is None
+
+
+def test_resume_reads_wave_metrics_written_before_parse_fallbacks(
+        spark, tmp_path):
+    """A store whose wave_metrics snapshot was written before the
+    parse_fallbacks column existed resumes cleanly: the declared schema is
+    applied to the scan, so the column is there and NULL for the old rows,
+    and rows appended by the resumed crawl carry their value."""
+    from crawler_spark.plans.crawl_job import CrawlJob
+
+    cols = ("wave int, fetched long, downloaded long, absent long, "
+            "parsed_ok long, deferred long, enqueued_photos long")
+    store = SnapshotStore(str(tmp_path))
+    store.commit("wave_metrics", spark.createDataFrame(
+        [(0, 5, 4, 1, 4, 0, 2, "{}")], cols + ", step_seconds_json string"))
+    job = CrawlJob(spark, str(tmp_path), None, prewarm=False)
+
+    def got():
+        return sorted((r["wave"], r["parse_fallbacks"], r["fetched"])
+                      for r in job.wave_metrics().collect())
+
+    assert "parse_fallbacks" in job.wave_metrics().columns
+    assert got() == [(0, None, 5)]
+    store.commit("wave_metrics", spark.createDataFrame(
+        [(1, 2, 2, 0, 2, 0, 0, 0, "{}")],
+        cols + ", parse_fallbacks long, step_seconds_json string"))
+    assert got() == [(0, None, 5), (1, 0, 2)]
